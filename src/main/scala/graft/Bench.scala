@@ -3,26 +3,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Netty event loops that idle out mid-run (default 120 s) spin in
-      // prepareToDestroy on this netty version, permanently burning ~20
-      // cores and poisoning every later measurement — keep connections
-      // alive for the whole run instead.
-      .config("spark.network.timeout", "3600s")
-      // shuffle/spill on tmpfs: the bench VM's block device stalls
-      // under load (idle iowait load ~6), and disk-backed shuffle files
-      // made identical queries 2-10x slower run-to-run
-      .config("spark.local.dir", s"${graft.Scratch.root}/spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Same planner surface as Verify and the test sessions: the native
-    // top-k operator + its window rewrite are part of the library, and
-    // the official bench should time the plans a library user gets.
-    plans.TopKPerKey.register(spark)
+    val spark = GraftSession()
     // Warm the machinery the first timed query would otherwise pay for
     // (codegen pipeline, shuffle service, parquet reader init) with a
     // trivial query — measurement isolation, not a result change.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** One-shot diagnostic main (round 15, r14 ask #9): per-microbatch
@@ -20,16 +19,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 object StreamMicrobatchProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.network.timeout", "3600s")
-      .config("spark.local.dir", s"${graft.Scratch.root}/spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    plans.TopKPerKey.register(spark)
+    val spark = GraftSession()
 
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.streams.addListener(new StreamingQueryListener {

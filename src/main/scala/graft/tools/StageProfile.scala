@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility (optimization rounds): per-STAGE breakdown of individual
   * registered queries — wall duration, summed executor task time, input
@@ -17,17 +16,7 @@ import org.apache.spark.sql.SparkSession
 object StageProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.network.timeout", "3600s")
-      .config("spark.local.dir", s"${graft.Scratch.root}/spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TopKPerKey.register(spark)
+    val spark = graft.GraftSession()
     // A/B hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" applies runtime SQL
     // confs so a candidate setting can be profiled without a rebuild.
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach {
@@ -77,13 +66,10 @@ object StageProfile {
       val t0 = System.nanoTime()
       val n = df.count()
       val dt = (System.nanoTime() - t0) / 1e9
-      // drain the async listener bus before reading/clearing the queue
-      // (r18 ADVICE: late stage-completed events were dropped or
-      // attributed to the next query's breakdown). listenerBus is
-      // private[spark]; a short settle after the action is enough for
-      // a dev tool — stage-completed events trail the job end by
-      // milliseconds, not seconds.
-      Thread.sleep(500)
+      // drain the async listener bus before reading/clearing the queue,
+      // so no late stage-completed event is dropped or attributed to the
+      // next query's breakdown
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
       println(f"==== $name  total=$dt%.2fs rows=$n")
       import scala.jdk.CollectionConverters._
       stages.asScala.toSeq.sortBy(-_.taskMs).foreach { r =>

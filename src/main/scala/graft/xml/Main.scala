@@ -19,7 +19,8 @@ import org.apache.spark.sql.SparkSession
   *     successful conversion.
   *   - `-m N` (reference: worker-process count) maps to Spark local
   *     parallelism — ignored when a master is already configured (on a
-  *     cluster, parallelism is the cluster's).
+  *     cluster, parallelism is the cluster's) or a live session is
+  *     borrowed.
   *   - `-v` maps to the Spark log level; `-l` appends a plain-text log.
   *   - `-b` (per-process memory budget) is accepted and ignored: Spark's
   *     unified memory manager owns executor memory (SURVEY.md §2.A X2).
@@ -86,19 +87,15 @@ object Main {
       System.err.println(msg)
       sys.exit(1)
     }
-    val builder = SparkSession.builder().appName("xml-to-parquet")
-    if (!sys.props.contains("spark.master") &&
-        !sys.env.contains("SPARK_MASTER"))
-      builder.master(s"local[${args.multi}]")
-        .config("spark.sql.shuffle.partitions", args.multi.toString)
-    // Only stop a session this invocation created: when embedded in a
-    // larger app (or test harness) with a live session, borrow it.
-    val pre = SparkSession.getDefaultSession
-    val spark = builder.getOrCreate()
+    // When embedded in a larger app (or test harness) with a live
+    // session, borrow it as is: -m, -v and the final stop apply only to
+    // a session this invocation created.
+    val borrowed = SparkSession.getDefaultSession
+    val spark = borrowed.getOrElse(graft.GraftSession(args.multi))
     try {
-      if (pre.isEmpty) spark.sparkContext.setLogLevel(args.verbose)
+      if (borrowed.isEmpty) spark.sparkContext.setLogLevel(args.verbose)
       run(spark, args)
-    } finally if (pre.isEmpty) spark.stop()
+    } finally if (borrowed.isEmpty) spark.stop()
   }
 
   /** `-t` validation, separated from `main` so the exit path is

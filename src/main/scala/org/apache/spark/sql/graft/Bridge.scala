@@ -43,6 +43,12 @@ object Bridge {
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .cloneSession()
 
+  /** Block until every event posted so far has reached every listener
+    * (`listenerBus` is private[spark]).
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Wrap a custom LogicalPlan as a DataFrame (classic Dataset.ofRows
     * is private[sql]).
     */

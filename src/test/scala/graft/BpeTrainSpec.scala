@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hand-computed golden fixtures for the q_bpe_train merge loop (r17
@@ -14,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * symbol the loop stops, emitting fewer than Rounds rows rather than
   * degenerate merges.
   */
-class BpeTrainSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeTrainSpec extends AnyFunSuite with SharedSpark {
 
   private def tmpDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, rng}
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * chooses). Fixed scalacheck seed, bounded samples — each case round
   * trips through a DataFrame.
   */
-class FunctionsPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FunctionsPropertySpec extends AnyFunSuite with SharedSpark {
 
   private val seed = rng.Seed(20260812L)
 

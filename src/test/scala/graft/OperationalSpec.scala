@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic invariants for the round-7 Operational + Learning blocks,
@@ -8,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sf0.001 corpus (the oracle gate checks SQL parity; these check the
   * MATH against a second algorithm).
   */
-class OperationalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OperationalSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
   private def q(name: String) = SparkEntry.queries(name)(spark, sf)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +11,7 @@ import graft.xml.XmlToParquetJob
   * archive conversion — each verified against an independent
   * re-derivation of the same result.
   */
-class OperatorExtensionsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OperatorExtensionsSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -157,7 +149,6 @@ class OperatorExtensionsSpec extends AnyFunSuite {
 
   test("RowNumberTopKRewrite turns the window spelling into TopKPerKey") {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.TopKPerKey.register(spark)
     val w = Window.partitionBy("l_returnflag")
       .orderBy(col("l_extendedprice").desc, col("l_orderkey").asc,
         col("l_linenumber").asc)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Brute-force re-derivations for the round-6 pair-mining operators at
@@ -8,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * blocked prefix set-similarity join) plus plan pins for the TPC-H
   * macro additions (Q7/Q14/Q17).
   */
-class PairMiningSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PairMiningSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Partition-count invariance for the round-9 descaled rewrites: every
@@ -10,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * plans 1 shuffle partition or 13 — the property that makes the
   * rewrite safe to claim as "same output at any partition count".
   */
-class PartitionInvarianceSpec extends AnyFunSuite {
+class PartitionInvarianceSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -97,13 +96,9 @@ class PartitionInvarianceSpec extends AnyFunSuite {
 
   test("descaled rewrites are bit-identical at 1 vs 13 shuffle " +
     "partitions") {
-    // SparkSession.builder getOrCreate reuses one context; the shuffle
-    // partition count is session-conf, so set it per pass
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the shuffle partition count is session-conf: set it per pass on a
+    // clone, so the shared session keeps its own
+    val s = org.apache.spark.sql.graft.Bridge.cloneSession(spark)
     def pass(parts: Int): Map[String, Seq[String]] = {
       s.conf.set("spark.sql.shuffle.partitions", parts.toString)
       targets.map { q =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Inventory-level checks at sf0.001: every registered query runs and
@@ -8,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * independent implementations of the same semantics (MinHash candidates
   * vs exact n-gram Jaccard pairs; streaming vs batch tumbling windows).
   */
-class QueryInventorySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QueryInventorySpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fixture specs for the second round-15 query block (price index,
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Round15NewQueriesSpec: every query lands WITH hand-computable edge
   * pins; the inventory-wide PlanQualitySpec sweep pins the plans.
   */
-class Round15BatchBSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round15BatchBSpec extends AnyFunSuite with SharedSpark {
 
   private def tmpDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the same entry point Verify and the oracle use — so these pins hold
   * for exactly the code that ships.
   */
-class Round15EdgeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round15EdgeSpec extends AnyFunSuite with SharedSpark {
 
   private def tmpDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString

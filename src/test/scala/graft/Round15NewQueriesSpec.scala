@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit/fixture specs for the round-15 query additions — every new
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ask). The inventory-wide PlanQualitySpec sweep pins their plans;
   * these pin their semantics on hand-computable fixtures.
   */
-class Round15NewQueriesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round15NewQueriesSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

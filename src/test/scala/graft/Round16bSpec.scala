@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Closed-form unit fixtures for the round-16 continuation operators
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * definition, so a compensating bug shared by the Spark query and its
   * DuckDB oracle cannot pass here.
   */
-class Round16bSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round16bSpec extends AnyFunSuite with SharedSpark {
 
   private def tmpDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString

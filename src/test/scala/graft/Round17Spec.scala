@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * closed form and the tripwire is exercised on a real over-budget
   * table, so a future loosening of either fails here.
   */
-class Round17Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round17Spec extends AnyFunSuite with SharedSpark {
 
   private def tmpDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString

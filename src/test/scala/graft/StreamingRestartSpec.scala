@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import streaming.StatefulEwma
@@ -26,14 +26,19 @@ import streaming.StatefulEwma.{EwmaEvent, EwmaRow, EwmaState}
   * sink's _spark_metadata commit log, which the batch reader then
   * consults for the committed-files view.
   */
-class StreamingRestartSpec extends AnyFunSuite {
+class StreamingRestartSpec extends AnyFunSuite with SharedSpark
+    with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // Two shuffle partitions, so each stateful operator runs two state-store
+  // partitions (fixed from this conf at a fresh checkpoint's first run).
+  // Set for this suite only: the shared session gets its value back.
+  private var sharedPartitions = ""
+  override def beforeAll(): Unit = {
+    sharedPartitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+  }
+  override def afterAll(): Unit =
+    spark.conf.set("spark.sql.shuffle.partitions", sharedPartitions)
 
   private val sf = "/root/testdata/sf0.001"
 

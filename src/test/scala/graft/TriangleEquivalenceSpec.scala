@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The size-gated q_graph_triangle strategy (round 13) flips between
@@ -12,14 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the broadcast path, so the wedge path would otherwise go
   * unexercised by the oracle sweep).
   */
-class TriangleEquivalenceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TriangleEquivalenceSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

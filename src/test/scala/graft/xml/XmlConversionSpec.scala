@@ -1,8 +1,8 @@
 package graft.xml
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.operators.XmlQueries
 import graft.sources.ArchiveXmlSource
 import graft.xml.XmlToParquetJob.Config
@@ -11,13 +11,7 @@ import graft.xml.XmlToParquetJob.Config
   * equivalent of the reference's README golden outputs (full document,
   * include-path, exclude-path; SURVEY.md §5.1).
   */
-class XmlConversionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class XmlConversionSpec extends AnyFunSuite with SharedSpark {
 
   private def xmlPath =
     XmlQueries.fixtureDir.resolve("bookOrder.xml").toString
@@ -269,6 +263,8 @@ class XmlConversionSpec extends AnyFunSuite {
     java.nio.file.Files.copy(XmlQueries.fixtureDir.resolve("books.zip"),
       srcDir.resolve("books.zip"))
     val target = java.nio.file.Files.createTempDirectory("cli_out").toString
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(parts != "2")
     Main.main(Array(
       "-x", xsdFile.toString, "-t", target, "-f", "-m", "2",
       "-e", "/bookOrder/note",
@@ -281,8 +277,9 @@ class XmlConversionSpec extends AnyFunSuite {
     assert(back.columns.contains("file_info"))
     // -e pruned the note subtree
     assert(!back.select("bookOrder.*").columns.contains("note"))
-    // borrowed session must survive main()
+    // borrowed session must survive main(), and -m must not resize it
     assert(!spark.sparkContext.isStopped)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == parts)
   }
 
   test("CLI flag parser matches the reference argument grammar") {

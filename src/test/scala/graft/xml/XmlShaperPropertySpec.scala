@@ -2,10 +2,10 @@ package graft.xml
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, rng}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.operators.XmlQueries
 import graft.xml.XmlToParquetJob.Config
 
@@ -14,13 +14,7 @@ import graft.xml.XmlToParquetJob.Config
   * a fixed seed (deterministic CI) and a bounded sample count — each
   * case is a full Spark read, so breadth is traded for end-to-endness.
   */
-class XmlShaperPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class XmlShaperPropertySpec extends AnyFunSuite with SharedSpark {
 
   private val word: Gen[String] =
     Gen.chooseNum(3, 10).flatMap(n => Gen.stringOfN(n, Gen.alphaChar))
